@@ -500,10 +500,10 @@ class CrawlEngine(
     var pageBufN = 0
     def flushPageBuf(): Unit = if (pageBuf.nonEmpty) {
       pageBufN += 1
-      spark.createDataset(pageBuf.toIndexedSeq).coalesce(1)
-        .write.option("compression", "none")
-        .option("parquet.enable.dictionary", "false")
-        .parquet(s"$pagesSink/buf_$pageBufN")
+      // one file, written from the driver (no job)
+      org.apache.spark.sql.GraftSqlBridge.writeParquet(
+        spark.createDataset(pageBuf.toIndexedSeq).toDF(), s"$pagesSink/buf_$pageBufN",
+        Map("compression" -> "none", "parquet.enable.dictionary" -> "false"))
       pagesWritten = true
       pageBuf.clear()
     }
@@ -688,16 +688,8 @@ class CrawlEngine(
     // distributed scan — each partition builds its shard, driver ORs them)
     def bloomFromSeen(urlLower: org.apache.spark.rdd.RDD[String], expected: Long): Unit = {
       if (expected <= 0) return
-      val size = math.max(1024L, expected)
       val parts = urlLower.mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val b = BloomFilter.create(size, 0.01)
-          it.foreach(u => b.putBinary(org.apache.spark.unsafe.types.UTF8String.fromString(u).getBytes))
-          val bos = new java.io.ByteArrayOutputStream()
-          b.writeTo(bos)
-          Iterator.single(bos.toByteArray)
-        }
+        if (it.isEmpty) Iterator.empty else Iterator.single(CrawlEngine.bloomBytes(it, expected))
       }.collect()
       mergeBloomParts(parts)
     }
@@ -730,7 +722,11 @@ class CrawlEngine(
     // pays ~10 driver round-trips for <=dozens of rows of actual work.
     // ------------------------------------------------------------------
     var frontierLocal: Option[Vector[FrontierEntry]] = None
-    var driverSeen: java.util.HashSet[String] = new java.util.HashSet[String]()
+    // the seen mirror maps url_lower -> url: while live it IS the seen
+    // table (a snapshot writes it from the driver)
+    var driverSeen: java.util.HashMap[String, String] = new java.util.HashMap[String, String]()
+    def mirrorSeen(lower: String, url: String): Unit =
+      driverSeen.putIfAbsent(lower, if (url == lower) lower else url) // share the common case
     var driverSigs: java.util.HashSet[java.lang.Long] = new java.util.HashSet[java.lang.Long]()
     def dropMirrors(): Unit = { driverSeen = null; driverSigs = null }
     def listedLocal(patterns: Seq[String], url: String): Boolean =
@@ -801,44 +797,64 @@ class CrawlEngine(
     val canonicalOrder = Seq(col("depth"), col("discovery_seq"), col("host"), col("url"))
 
     // --- resume: restore all loop state from the latest committed snapshot
-    // (north rule: resumable from checkpoint with per-partition lineage) ---
+    // (north rule: resumable from checkpoint with per-partition lineage),
+    // on the path the snapshot was committed on: a driver-local frontier
+    // and live seen/signature mirrors come back to the driver (the crawl
+    // continues in smallEpoch); distributed state is restored distributed ---
+    checkpoint.foreach(_.begin(-1L))
     resumeFrom.foreach { ck =>
       val e = ck.latestEpoch()
       if (e >= 0) {
-        // restored state is distributed-only: the local-frontier fast path
-        // and its membership mirrors never survive a restart
-        frontierLocal = None
-        dropMirrors()
-        frontier = ck.readTable(e, "frontier").localCheckpoint(true)
-        seenRdd = ck.readTable(e, "seen").rdd
-          .map(r => (r.getString(0), r.getString(1)))
-          .partitionBy(seenPartitioner)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        seenBase = Some(seenRdd)
-        sigRdd = ck.readTable(e, "signatures").rdd.map(r => (r.getLong(0), true))
-          .partitionBy(seenPartitioner)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sigBase = Some(sigRdd)
-        restoredPages = Some(ck.readTable(e, "pages").localCheckpoint(true))
+        val m = ck.readManifest(e)
+        val (wasLocal, hadMirrors) = Checkpointer.driverState(m)
+        // a parent names a snapshot in its own directory
+        checkpoint.filter(_.root == ck.root).foreach(_.begin(e))
+        if (wasLocal)
+          frontierLocal = Some(ck.readTable(e, "frontier").as[FrontierEntry].collect().toVector)
+        else {
+          frontierLocal = None
+          frontier = ck.readTable(e, "frontier").localCheckpoint(true)
+        }
+        blooms = Vector.empty
+        if (hadMirrors) {
+          val seenPairs = ck.readTable(e, "seen").as[(String, String)].collect()
+          val sigs = ck.readTable(e, "signatures").as[Long].collect()
+          driverSeen = new java.util.HashMap[String, String](seenPairs.length * 2)
+          seenPairs.foreach(kv => mirrorSeen(kv._1, kv._2))
+          driverSigs = new java.util.HashSet[java.lang.Long](sigs.length * 2)
+          sigs.foreach(s => driverSigs.add(Long.box(s)))
+          seenRdd = spark.sparkContext.parallelize(seenPairs.toSeq, 1).partitionBy(seenPartitioner)
+          sigRdd = spark.sparkContext.parallelize(sigs.toSeq.map((_, true)), 1)
+            .partitionBy(seenPartitioner)
+          seenCount = seenPairs.length.toLong
+          if (seenCount > 0)
+            blooms = Vector(CrawlEngine.bloomBytes(seenPairs.iterator.map(_._1), seenCount))
+          restoredPages = Some(ck.readTable(e, "pages"))
+        } else {
+          dropMirrors()
+          seenRdd = ck.readTable(e, "seen").rdd
+            .map(r => (r.getString(0), r.getString(1)))
+            .partitionBy(seenPartitioner)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          seenBase = Some(seenRdd)
+          sigRdd = ck.readTable(e, "signatures").rdd.map(r => (r.getLong(0), true))
+            .partitionBy(seenPartitioner)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          sigBase = Some(sigRdd)
+          restoredPages = Some(ck.readTable(e, "pages").localCheckpoint(true))
+          seenCount = seenRdd.count()
+          bloomFromSeen(seenRdd.map(_._1), seenCount)
+        }
         ck.readTable(e, "host_tokens").collect()
           .foreach(r => hostTokensMap.put(r.getString(0), Long.box(r.getLong(1))))
-        seenCount = seenRdd.count()
-        blooms = Vector.empty
-        bloomFromSeen(seenRdd.map(_._1), seenCount)
-        val m = ck.readManifest(e)
         def longField(k: String): Option[Long] =
           ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(m).map(_.group(1).toLong)
         def strField(k: String): Option[String] =
           ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(m).map(_.group(1))
         longField("seq_counter").foreach(seqCounter = _)
         longField("wildcard_remaining").foreach(wildcardRemaining = _)
-        "\"path_budget\":\\{([^}]*)\\}".r.findFirstMatchIn(m).foreach { g =>
-          val body = g.group(1).trim
-          if (body.nonEmpty) pathBudget = body.split(",").map { kv =>
-            val Array(k, v) = kv.split(":")
-            (k.trim.stripPrefix("\"").stripSuffix("\""), v.trim.toLong)
-          }.toMap
-        }
+        val restoredBudget = Checkpointer.pathBudget(m)
+        if (restoredBudget.nonEmpty) pathBudget = restoredBudget
         strField("redirect_host").filter(_.nonEmpty)
           .foreach(rh => scope = scope.copy(redirectHost = rh))
         // chain lineage: a kill during the sitemap chain resumes mid-chain
@@ -990,6 +1006,24 @@ class CrawlEngine(
       }
     }
 
+    // snapshot of the epoch just completed, when one is due: the tables
+    // are only built then (building `pages` flushes the page buffer), and
+    // the manifest records the path the crawl is on. While the mirrors are
+    // live they hold the seen and signature tables (bounded by mirrorCap),
+    // which are then written from the driver too
+    def commitSnapshot(): Unit = checkpoint.filter(_.due(epoch)).foreach { ck =>
+      import scala.jdk.CollectionConverters._
+      val mirrorsLive = driverSeen != null
+      val (seenT, sigsT) =
+        if (!mirrorsLive) (seen, signatures)
+        else (spark.createDataset(driverSeen.asScala.toSeq).toDF(seenSchema.fieldNames: _*),
+          spark.createDataset(driverSigs.asScala.toSeq.map(_.longValue)).toDF(sigSchema.fieldNames: _*))
+      ck.recordPath(frontierLocal = frontierLocal.isDefined, mirrorsLive = mirrorsLive)
+      ck.commit(epoch, frontierDf, seenT, sigsT, hostTokensDf(), pages,
+        seqCounter, wildcardRemaining, pathBudget, scope, metrics.toSeq,
+        chainStarted, chainSitemapLower.toSeq.sorted, discoveredSitemaps.values.toSeq)
+    }
+
     // ---- full driver-side epoch (see the fast-path comment at the
     // frontierLocal declaration): admission runs through the Sequential
     // module — the exact code the differential oracle runs — fetch goes
@@ -1003,7 +1037,7 @@ class CrawlEngine(
       // dedup is structural — the local frontier is unique by lower(url)
       // by construction, like the distributed one.)
       val unseenV =
-        if (driverSeen != null) readyV.filterNot(e => driverSeen.contains(UrlOps.lowerUtf8(e.url)))
+        if (driverSeen != null) readyV.filterNot(e => driverSeen.containsKey(UrlOps.lowerUtf8(e.url)))
         else {
           val present = probeSeenPresent(readyV.map(e => UrlOps.lowerUtf8(e.url)))
           readyV.filterNot(e => present.contains(UrlOps.lowerUtf8(e.url)))
@@ -1125,7 +1159,7 @@ class CrawlEngine(
       val seenDeltaV = admittedV.iterator.map(e => (UrlOps.lowerUtf8(e.url), e.url))
         .filterNot(kv => retriedLower.contains(kv._1)).toVector
       if (driverSeen != null) {
-        seenDeltaV.foreach(kv => driverSeen.add(kv._1))
+        seenDeltaV.foreach(kv => mirrorSeen(kv._1, kv._2))
         if (driverSeen.size > CrawlEngine.mirrorCap) dropMirrors()
       }
       seenCount += seenDeltaV.size
@@ -1207,7 +1241,7 @@ class CrawlEngine(
       val uniq0 = linksRaw.groupBy(t => UrlOps.lowerUtf8(t._4)).values
         .map(_.min(Sequential.linkOrder)).toVector
       val uniq = {
-        if (driverSeen != null) uniq0.filterNot(t => driverSeen.contains(UrlOps.lowerUtf8(t._4)))
+        if (driverSeen != null) uniq0.filterNot(t => driverSeen.containsKey(UrlOps.lowerUtf8(t._4)))
         else {
           val present = probeSeenPresent(uniq0.map(t => UrlOps.lowerUtf8(t._4)))
           uniq0.filterNot(t => present.contains(UrlOps.lowerUtf8(t._4)))
@@ -1236,9 +1270,7 @@ class CrawlEngine(
       metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
         uniq.size.toLong, frontierCount, seenCount, budgetStopped,
         (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
-      checkpoint.foreach(_.commit(epoch, frontierDf, seen, signatures, hostTokensDf(), pages,
-        seqCounter, wildcardRemaining, pathBudget, scope, metrics.toSeq,
-        chainStarted, chainSitemapLower.toSeq.sorted, discoveredSitemaps.values.toSeq))
+      commitSnapshot()
       epoch += 1
       onEpoch.foreach(f => f(epoch - 1))
       done = budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
@@ -1969,9 +2001,7 @@ class CrawlEngine(
           newLinkCount, frontierCount, seenCount, budgetStopped,
           (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
 
-        checkpoint.foreach(_.commit(epoch, frontier, seen, signatures, hostTokensDf(), pages,
-          seqCounter, wildcardRemaining, pathBudget, scope, metrics.toSeq,
-          chainStarted, chainSitemapLower.toSeq.sorted, discoveredSitemaps.values.toSeq))
+        commitSnapshot()
 
         epochCache.foreach(_.unpersist(false))
         epochCache = None
@@ -2075,6 +2105,18 @@ object CrawlEngine {
   def dedupCanonicalMinLocal(frontier: Vector[graft.model.FrontierEntry]): Vector[graft.model.FrontierEntry] =
     frontier.groupBy(e => graft.url.UrlOps.lowerUtf8(e.url)).values
       .map(_.min(Sequential.canonical)).toVector
+
+  /** Serialized 1%-FPP bloom filter over lowercased URLs, sized for
+    * `expected` keys (at least 1024) — the seen store's fast-negative
+    * filter; keys hash as their UTF-8 bytes, like the gate's probe.
+    */
+  private[engine] def bloomBytes(urlLower: Iterator[String], expected: Long): Array[Byte] = {
+    val b = BloomFilter.create(math.max(1024L, expected), 0.01)
+    urlLower.foreach(u => b.putBinary(u.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val bos = new java.io.ByteArrayOutputStream()
+    b.writeTo(bos)
+    bos.toByteArray
+  }
 
   /** Static ParsedPage schema — handed to every delta read so no per-epoch
     * footer-inference job runs.
