@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.util.sketch.BloomFilter
+import scala.jdk.CollectionConverters._
 
 /** Crawl scope — the reference's `RelativeSelectors` tuple
   * (`spider/src/lib.rs:452-458`): `(sub_matcher, [parent_host, scheme],
@@ -337,9 +338,12 @@ class CrawlEngine(
     var budgetStopped = false
 
     // --- URL-seen: bloom (fast-negative) + exact table (authoritative).
-    // One compact bloom per epoch delta (sized to the delta), broadcast as
-    // a group — never one giant filter (SURVEY §7 risk note). Held as
-    // serialized bytes; executors deserialize lazily via BloomGroup. ---
+    // While the driver mirrors are live (see below) they ARE the seen and
+    // signature tables; the distributed stores and the bloom are built
+    // once, from the mirrors, when they drop. From then on: one compact
+    // bloom per epoch delta (sized to the delta), broadcast as a group —
+    // never one giant filter (SURVEY §7 risk note). Held as serialized
+    // bytes; executors deserialize lazily via BloomGroup. ---
     var blooms = Vector.empty[Array[Byte]]
     // B1 authoritative URL-seen store — the north rule's PARTITIONED
     // membership check: (url_lower, url) pairs hash-partitioned ONCE and
@@ -416,6 +420,34 @@ class CrawlEngine(
       sigProbe = null
       sigDeltaRdd = spark.sparkContext.emptyRDD[(Long, Boolean)].partitionBy(seenPartitioner)
     }
+    // Driver mirrors of the seen (url_lower -> url) and signature sets:
+    // the only seen and signature stores while the small-epoch path keeps
+    // them live (see the fast-path comment at frontierLocal)
+    var driverSeen: java.util.HashMap[String, String] = new java.util.HashMap[String, String]()
+    def mirrorSeen(lower: String, url: String): Unit =
+      driverSeen.putIfAbsent(lower, if (url == lower) lower else url) // share the common case
+    var driverSigs: java.util.HashSet[java.lang.Long] = new java.util.HashSet[java.lang.Long]()
+    // the one site that builds the distributed stores (lazily, from the
+    // mirrors) and the bloom (one filter over the mirror keys); deltas,
+    // bloom generations and compaction run from here on
+    def dropMirrors(): Unit = if (driverSeen != null) {
+      def slices(n: Int) = math.min(P, 1 + n / 65536) // small tasks at any mirror size
+      if (!driverSeen.isEmpty) {
+        val pairs = driverSeen.asScala.toSeq
+        seenRdd = spark.sparkContext.parallelize(pairs, slices(pairs.size))
+          .partitionBy(seenPartitioner)
+        blooms = Vector(CrawlEngine.bloomBytes(pairs.iterator.map(_._1), pairs.size))
+      }
+      if (!driverSigs.isEmpty) {
+        val sigs = driverSigs.asScala.toSeq.map(s => (s.longValue, true))
+        sigRdd = spark.sparkContext.parallelize(sigs, slices(sigs.size))
+          .partitionBy(seenPartitioner)
+      }
+      resetSeenProbe()
+      resetSigProbe()
+      driverSeen = null
+      driverSigs = null
+    }
     var sigWinnerCaches = Vector.empty[DataFrame]
     // persisted admitted sets backing the lazy seen deltas (released at
     // compaction)
@@ -427,7 +459,6 @@ class CrawlEngine(
       val dir = java.nio.file.Files.createTempDirectory("graft-pages-").toAbsolutePath
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
         try {
-          import scala.jdk.CollectionConverters._
           java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         } catch { case _: Throwable => }
@@ -444,13 +475,17 @@ class CrawlEngine(
       val dir = java.nio.file.Files.createTempDirectory("graft-blocked-").toAbsolutePath
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
         try {
-          import scala.jdk.CollectionConverters._
           java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         } catch { case _: Throwable => }
       }))
       dir.toString
     }
+    // a driver-side buffer leaves as ONE parquet file written from the
+    // driver (no job); the sinks are transient working state, so no codec
+    def writeBuffer(df: DataFrame, dir: String): Unit =
+      org.apache.spark.sql.GraftSqlBridge.writeParquet(df, dir,
+        Map("compression" -> "none", "parquet.enable.dictionary" -> "false"))
     var blockedWritten = false
     var blockedDeltaN = 0
     val blockedBuf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
@@ -462,10 +497,9 @@ class CrawlEngine(
       spark.read.schema(CrawlEngine.blockedSchema).parquet(dir).count()
     }
     def flushBlockedBuf(): Unit = if (blockedBuf.nonEmpty) {
-      import spark.implicits._
       blockedDeltaN += 1
-      blockedBuf.toSeq.toDF("url", "reason", "epoch")
-        .coalesce(1).write.mode("overwrite").parquet(s"$blockedSink/delta_${blockedDeltaN}_buf")
+      writeBuffer(spark.createDataset(blockedBuf.toIndexedSeq).toDF("url", "reason", "epoch"),
+        s"$blockedSink/delta_${blockedDeltaN}_buf")
       blockedWritten = true
       blockedBuf.clear()
     }
@@ -479,33 +513,39 @@ class CrawlEngine(
     val emptySeen = spark.emptyDataset[(String, String)].toDF("url_lower", "url")
     val emptySigs = spark.emptyDataset[Long].toDF("sig")
     val emptyPages = spark.emptyDataset[PageRow].toDF()
+    // the seen and signature tables: while the mirrors are live a local
+    // relation over them (a snapshot writes it from the driver), else the
+    // distributed stores
     val seenSchema = emptySeen.schema
     def seen: DataFrame =
-      spark.createDataFrame(seenRdd.map(kv => Row(kv._1, kv._2)), seenSchema)
+      if (driverSeen != null)
+        spark.createDataset(driverSeen.asScala.toSeq).toDF(seenSchema.fieldNames: _*)
+      else spark.createDataFrame(seenRdd.map(kv => Row(kv._1, kv._2)), seenSchema)
     val sigSchema = emptySigs.schema
     def signatures: DataFrame =
-      spark.createDataFrame(sigRdd.map(kv => Row(kv._1)), sigSchema)
+      if (driverSigs != null)
+        spark.createDataset(driverSigs.asScala.toSeq.map(_.longValue)).toDF(sigSchema.fieldNames: _*)
+      else spark.createDataFrame(sigRdd.map(kv => Row(kv._1)), sigSchema)
     // The pages view is ONE relation over the sink directory (never a
     // per-epoch union: a thousand-epoch crawl would otherwise build a
     // thousand-way union plan whose canonicalization alone OOMs the driver)
     var pagesWritten = false
     var restoredPages: Option[DataFrame] = None // resume-injected prior pages
     // Small-epoch page-delta buffer: tiny epochs append their parsed pages
-    // here and flush to ONE parquet delta per `pageBufCap` rows instead of
-    // paying a Spark write job per epoch (a toy crawl of 40 epochs paid 40
-    // jobs for a few hundred rows total). Every reader of the sink flushes
-    // first (`def pages`), so the view is always complete; `epoch` rides in
-    // the rows, so multi-epoch deltas are exact. Bounded by the cap.
+    // here and flush to ONE parquet delta per `pageBufCapBytes` of buffered
+    // pages instead of paying a Spark write job per epoch (a toy crawl of
+    // 40 epochs paid 40 jobs for a few hundred rows total). Every reader of
+    // the sink flushes first (`def pages`), so the view is always complete;
+    // `epoch` rides in the rows, so multi-epoch deltas are exact.
     val pageBuf = scala.collection.mutable.ArrayBuffer.empty[ParsedPage]
+    var pageBufBytes = 0L
     var pageBufN = 0
     def flushPageBuf(): Unit = if (pageBuf.nonEmpty) {
       pageBufN += 1
-      // one file, written from the driver (no job)
-      org.apache.spark.sql.GraftSqlBridge.writeParquet(
-        spark.createDataset(pageBuf.toIndexedSeq).toDF(), s"$pagesSink/buf_$pageBufN",
-        Map("compression" -> "none", "parquet.enable.dictionary" -> "false"))
+      writeBuffer(spark.createDataset(pageBuf.toIndexedSeq).toDF(), s"$pagesSink/buf_$pageBufN")
       pagesWritten = true
       pageBuf.clear()
+      pageBufBytes = 0L
     }
     val pageCols = Seq(col("url"), col("final_url"), col("host"), col("depth"),
       col("discovery_seq"), col("epoch"), col("status"), col("signature"),
@@ -531,7 +571,6 @@ class CrawlEngine(
     // for what is a bounded driver-side ledger.
     val hostTokensMap = lruMap[java.lang.Long]()
     def hostTokensDf(): DataFrame = {
-      import scala.jdk.CollectionConverters._
       val rows = hostTokensMap.entrySet().asScala.toSeq
         .map(e => (e.getKey, e.getValue.longValue))
       if (rows.isEmpty) spark.emptyDataset[(String, Long)].toDF("host", "tokens_milli")
@@ -614,7 +653,6 @@ class CrawlEngine(
                 bloom.writeTo(bos)
                 bos.toByteArray
               }
-              import scala.jdk.CollectionConverters._
               val hot = hostCounts.asScala
                 .filter { case (_, c) => c * 8 >= n && c >= 32 }.toArray
               a.add((pid, n, shard, hot))
@@ -635,7 +673,6 @@ class CrawlEngine(
     def drainAdmitStats(
         acc: org.apache.spark.util.CollectionAccumulator[AdmitStat],
         admittedDs: Dataset[FrontierEntry], expectedUpper: Long): Long = {
-      import scala.jdk.CollectionConverters._
       val seenPids = new java.util.HashSet[Int]()
       var uniqParts = acc.value.asScala.filter(e => seenPids.add(e._1)).toVector
       if (uniqParts.size < admitStatsParts) {
@@ -714,21 +751,18 @@ class CrawlEngine(
     // (gates, politeness, budget, links, frontier roll) runs driver-side
     // with the Sequential module — the same code the differential oracle
     // runs — and only fetch + the page sink touch Spark. The frontier
-    // lives in `frontierLocal`; driver mirrors of the seen/signature
-    // membership make the gate job-free. A distributed epoch (candCount
-    // over the threshold) materializes the frontier, drops the mirrors
-    // permanently, and every later epoch runs the distributed path.
+    // lives in `frontierLocal`; the driver mirrors ARE the seen and
+    // signature stores, so the gate, the signature dedup and the store
+    // appends run no job. A distributed epoch (candCount over the
+    // threshold) materializes the frontier and drops the mirrors
+    // permanently — `dropMirrors` builds the distributed stores and the
+    // bloom from them, once — and every later epoch runs the distributed
+    // path. Past `mirrorCap` the mirrors drop the same way and the small
+    // path probes those stores instead.
     // At toy scale (the reference's own test crawls) an epoch otherwise
     // pays ~10 driver round-trips for <=dozens of rows of actual work.
     // ------------------------------------------------------------------
     var frontierLocal: Option[Vector[FrontierEntry]] = None
-    // the seen mirror maps url_lower -> url: while live it IS the seen
-    // table (a snapshot writes it from the driver)
-    var driverSeen: java.util.HashMap[String, String] = new java.util.HashMap[String, String]()
-    def mirrorSeen(lower: String, url: String): Unit =
-      driverSeen.putIfAbsent(lower, if (url == lower) lower else url) // share the common case
-    var driverSigs: java.util.HashSet[java.lang.Long] = new java.util.HashSet[java.lang.Long]()
-    def dropMirrors(): Unit = { driverSeen = null; driverSigs = null }
     def listedLocal(patterns: Seq[String], url: String): Boolean =
       if (config.listsAreRegex) patterns.exists(p => p.r.findFirstIn(url).isDefined)
       else patterns.contains(url)
@@ -800,7 +834,8 @@ class CrawlEngine(
     // (north rule: resumable from checkpoint with per-partition lineage),
     // on the path the snapshot was committed on: a driver-local frontier
     // and live seen/signature mirrors come back to the driver (the crawl
-    // continues in smallEpoch); distributed state is restored distributed ---
+    // continues in smallEpoch; the stores are built only if the mirrors
+    // drop); distributed state is restored distributed ---
     checkpoint.foreach(_.begin(-1L))
     resumeFrom.foreach { ck =>
       val e = ck.latestEpoch()
@@ -823,12 +858,7 @@ class CrawlEngine(
           seenPairs.foreach(kv => mirrorSeen(kv._1, kv._2))
           driverSigs = new java.util.HashSet[java.lang.Long](sigs.length * 2)
           sigs.foreach(s => driverSigs.add(Long.box(s)))
-          seenRdd = spark.sparkContext.parallelize(seenPairs.toSeq, 1).partitionBy(seenPartitioner)
-          sigRdd = spark.sparkContext.parallelize(sigs.toSeq.map((_, true)), 1)
-            .partitionBy(seenPartitioner)
           seenCount = seenPairs.length.toLong
-          if (seenCount > 0)
-            blooms = Vector(CrawlEngine.bloomBytes(seenPairs.iterator.map(_._1), seenCount))
           restoredPages = Some(ck.readTable(e, "pages"))
         } else {
           dropMirrors()
@@ -897,7 +927,6 @@ class CrawlEngine(
       * banked token bucket) — a single join in the gate instead of two.
       */
     def politenessStateDf(): DataFrame = {
-      import scala.jdk.CollectionConverters._
       val hosts = (throttleOverrideMs.keySet.asScala ++ latencyEma.keySet.asScala ++
         hostTokensMap.keySet.asScala).toSet.toSeq
       val rows = hosts.map { h =>
@@ -924,39 +953,40 @@ class CrawlEngine(
     var done = frontierCountPrev == 0
     var epochCache: Option[DataFrame] = None // politeness rank cache, per epoch
 
-    // tiny-epoch membership probes against the distributed stores — the
-    // mirror-dropped fallback: ONE job over <= threshold keys
-    def probeSeenPresent(keys: Seq[String]): Set[String] =
-      if (keys.isEmpty) Set.empty
-      else spark.sparkContext.parallelize(keys, 1).map(k => (k, ()))
-        .partitionBy(seenPartitioner)
+    // exact membership probe against a store: keyed rows shuffle to the
+    // store's partitions (the store is scanned in place) and keep the rows
+    // whose key is (`present`) or is not in the probe snapshot ∪ delta
+    def probeSeen[T: scala.reflect.ClassTag](keyed: org.apache.spark.rdd.RDD[(String, T)],
+        present: Boolean): org.apache.spark.rdd.RDD[T] =
+      keyed.partitionBy(seenPartitioner)
         .zipPartitions(seenProbeRdd(), seenDeltaRdd) { (cit, pit, dit) =>
           val base: Array[AnyRef] =
             if (pit.hasNext) pit.next().asInstanceOf[Array[AnyRef]] else new Array[AnyRef](0)
-          var delta: java.util.HashSet[String] = null
-          while (dit.hasNext) {
-            if (delta == null) delta = new java.util.HashSet[String]()
-            delta.add(dit.next()._1)
-          }
-          cit.collect { case (k, _)
-            if java.util.Arrays.binarySearch(base, k) >= 0 ||
-              (delta != null && delta.contains(k)) => k }
-        }.collect().toSet
-    def probeSigsPresent(sigs: Set[Long]): Set[Long] =
-      if (sigs.isEmpty) Set.empty
-      else spark.sparkContext.parallelize(sigs.toSeq, 1).map(k => (k, ()))
-        .partitionBy(seenPartitioner)
+          val delta = new java.util.HashSet[String]()
+          dit.foreach(kv => delta.add(kv._1))
+          cit.collect { case (k, r)
+            if (java.util.Arrays.binarySearch(base, k) >= 0 || delta.contains(k)) == present => r }
+        }
+    def probeSigs[T: scala.reflect.ClassTag](keyed: org.apache.spark.rdd.RDD[(Long, T)],
+        present: Boolean): org.apache.spark.rdd.RDD[T] =
+      keyed.partitionBy(seenPartitioner)
         .zipPartitions(sigProbeRdd(), sigDeltaRdd) { (cit, pit, dit) =>
           val base = if (pit.hasNext) pit.next() else Array.emptyLongArray
-          var delta: java.util.HashSet[java.lang.Long] = null
-          while (dit.hasNext) {
-            if (delta == null) delta = new java.util.HashSet[java.lang.Long]()
-            delta.add(Long.box(dit.next()._1))
-          }
-          cit.collect { case (k, _)
-            if java.util.Arrays.binarySearch(base, k) >= 0 ||
-              (delta != null && delta.contains(Long.box(k))) => k }
-        }.collect().toSet
+          val delta = new java.util.HashSet[java.lang.Long]()
+          dit.foreach(kv => delta.add(Long.box(kv._1)))
+          cit.collect { case (k, r)
+            if (java.util.Arrays.binarySearch(base, k) >= 0 || delta.contains(Long.box(k))) == present => r }
+        }
+    // tiny-epoch membership probes — the mirror-dropped fallback: ONE job
+    // over <= threshold keys
+    def probeSeenPresent(keys: Seq[String]): Set[String] =
+      if (keys.isEmpty) Set.empty
+      else probeSeen(spark.sparkContext.parallelize(keys.map(k => (k, k)), 1), present = true)
+        .collect().toSet
+    def probeSigsPresent(sigs: Set[Long]): Set[Long] =
+      if (sigs.isEmpty) Set.empty
+      else probeSigs(spark.sparkContext.parallelize(sigs.toSeq.map(k => (k, k)), 1), present = true)
+        .collect().toSet
 
     // state hygiene for long crawls: every k epochs fold the
     // co-partitioned delta chains flat (localCheckpoint — distributed,
@@ -964,7 +994,8 @@ class CrawlEngine(
     // snapshots, and rebuild the bloom group only when its generation
     // count exceeds the documented FP bound — per-epoch gate cost stays
     // flat over thousands of epochs while compaction itself is O(delta)
-    // for most windows
+    // for most windows. Deltas exist only once the mirrors have dropped,
+    // so a crawl whose mirrors stay live never folds
     def compactStores(): Unit = {
       timed("seen_compact") {
         val c = seenRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1008,18 +1039,11 @@ class CrawlEngine(
 
     // snapshot of the epoch just completed, when one is due: the tables
     // are only built then (building `pages` flushes the page buffer), and
-    // the manifest records the path the crawl is on. While the mirrors are
-    // live they hold the seen and signature tables (bounded by mirrorCap),
-    // which are then written from the driver too
+    // the manifest records the path the crawl is on. While the mirrors
+    // are live, the seen/signatures views are written from the driver too
     def commitSnapshot(): Unit = checkpoint.filter(_.due(epoch)).foreach { ck =>
-      import scala.jdk.CollectionConverters._
-      val mirrorsLive = driverSeen != null
-      val (seenT, sigsT) =
-        if (!mirrorsLive) (seen, signatures)
-        else (spark.createDataset(driverSeen.asScala.toSeq).toDF(seenSchema.fieldNames: _*),
-          spark.createDataset(driverSigs.asScala.toSeq.map(_.longValue)).toDF(sigSchema.fieldNames: _*))
-      ck.recordPath(frontierLocal = frontierLocal.isDefined, mirrorsLive = mirrorsLive)
-      ck.commit(epoch, frontierDf, seenT, sigsT, hostTokensDf(), pages,
+      ck.recordPath(frontierLocal = frontierLocal.isDefined, mirrorsLive = driverSeen != null)
+      ck.commit(epoch, frontierDf, seen, signatures, hostTokensDf(), pages,
         seqCounter, wildcardRemaining, pathBudget, scope, metrics.toSeq,
         chainStarted, chainSitemapLower.toSeq.sorted, discoveredSitemaps.values.toSeq)
     }
@@ -1028,8 +1052,9 @@ class CrawlEngine(
     // frontierLocal declaration): admission runs through the Sequential
     // module — the exact code the differential oracle runs — fetch goes
     // through the Fetcher seam, parsing through the shared pure
-    // parsePage, pages to the same parquet sink. Two Spark jobs per
-    // epoch (fetch-collect + sink write), zero when nothing is admitted.
+    // parsePage, pages to the same parquet sink through the driver-side
+    // buffer. No Spark job while the Fetcher serves `fetchLocal` and the
+    // mirrors are live; else one fetch-collect job and the store probes.
     def smallEpoch(all: Vector[FrontierEntry], candCount: Long, epochT0: Long): Unit = {
       import java.nio.charset.StandardCharsets
       val (readyV, heldV) = all.partition(_.not_before <= epoch)
@@ -1086,9 +1111,10 @@ class CrawlEngine(
       if (br.budgetStopped) budgetStopped = true
       val admittedV = br.admitted ++ smExemptV
       val admittedCount = admittedV.size.toLong
-      // bloom delta — keeps the broadcast group valid for a later
-      // distributed epoch (same 1% FPP sizing rule as the fused builder)
-      if (admittedV.nonEmpty) {
+      // bloom delta once the mirrors have dropped — keeps the broadcast
+      // group valid for a later distributed epoch (same 1% FPP sizing rule
+      // as the fused builder); while they are live, dropMirrors builds it
+      if (driverSeen == null && admittedV.nonEmpty) {
         val b = BloomFilter.create(math.max(1024L, candCount), 0.01)
         admittedV.foreach(e =>
           b.putBinary(UrlOps.lowerUtf8(e.url).getBytes(StandardCharsets.UTF_8)))
@@ -1158,12 +1184,11 @@ class CrawlEngine(
       val retriedLower = toRetry.iterator.map(f => UrlOps.lowerUtf8(f.url)).toSet
       val seenDeltaV = admittedV.iterator.map(e => (UrlOps.lowerUtf8(e.url), e.url))
         .filterNot(kv => retriedLower.contains(kv._1)).toVector
+      seenCount += seenDeltaV.size
       if (driverSeen != null) {
         seenDeltaV.foreach(kv => mirrorSeen(kv._1, kv._2))
         if (driverSeen.size > CrawlEngine.mirrorCap) dropMirrors()
-      }
-      seenCount += seenDeltaV.size
-      if (seenDeltaV.nonEmpty) {
+      } else if (seenDeltaV.nonEmpty) {
         val d = spark.sparkContext.parallelize(seenDeltaV, 1).partitionBy(seenPartitioner)
         seenRdd = spark.sparkContext.union(seenRdd, d)
         seenDeltaRdd = spark.sparkContext.union(seenDeltaRdd, d)
@@ -1185,10 +1210,11 @@ class CrawlEngine(
       val ep = epoch
       val parsedV = keep.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))
       if (parsedV.nonEmpty) {
-        // buffered sink delta (one write job per pageBufCap rows, not per
-        // epoch); every pages-view read flushes first
+        // buffered sink delta (one driver-written file per pageBufCapBytes,
+        // not per epoch); every pages-view read flushes first
         pageBuf ++= parsedV
-        if (pageBuf.size >= CrawlEngine.pageBufCap) flushPageBuf()
+        pageBufBytes += parsedV.iterator.map(CrawlEngine.bufferedBytes).sum
+        if (pageBufBytes >= CrawlEngine.pageBufCapBytes) flushPageBuf()
       }
       // B11 veto gates expansion of ordinary pages; chain-phase sitemap
       // docs bypass it (the reference parses sitemaps outside the page
@@ -1224,7 +1250,7 @@ class CrawlEngine(
         expandingV = newSigs.toVector.sorted.map(perSig) ++
           afterVeto.filter(p => p.status == 200 && p.signature == 0L)
         if (driverSigs != null) newSigs.foreach(s => driverSigs.add(Long.box(s)))
-        if (newSigs.nonEmpty) {
+        else if (newSigs.nonEmpty) {
           val d = spark.sparkContext.parallelize(newSigs.toSeq.map((_, true)), 1)
             .partitionBy(seenPartitioner)
           sigRdd = spark.sparkContext.union(sigRdd, d)
@@ -1257,16 +1283,9 @@ class CrawlEngine(
         heldV ++ deferredV ++ br.leftover ++ retryV ++ newFrontierV))
       val frontierCount = frontierLocal.get.size.toLong
       frontierCountPrev = frontierCount
-      // store hygiene: with the mirrors gone the per-epoch probe jobs walk
-      // the delta chains — compact on the usual cadence. With mirrors live
-      // the chains stay lazy, but lineage and bloom generations still grow
-      // one layer per epoch, so compact on a COARSER cadence (the fold is a
-      // couple of tiny jobs every ~2x32 epochs — bounded lineage without
-      // re-paying the per-epoch fixed costs this path exists to avoid)
-      val smallCadence =
-        if (driverSeen == null) math.max(2, config.stateCompactionEpochs)
-        else math.max(32, config.stateCompactionEpochs)
-      if (seenRddEpochs >= smallCadence) compactStores()
+      // store hygiene once the mirrors are gone: the per-epoch probe jobs
+      // walk the delta chains — compact on the distributed cadence
+      if (seenRddEpochs >= math.max(2, config.stateCompactionEpochs)) compactStores()
       metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
         uniq.size.toLong, frontierCount, seenCount, budgetStopped,
         (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
@@ -1333,8 +1352,8 @@ class CrawlEngine(
       } else timed("epoch_total") {
         if (frontierLocal.isDefined) {
           // candidate volume outgrew the fast path: materialize the
-          // frontier and fall through to the distributed pipeline — the
-          // driver mirrors go stale from here on, permanently
+          // frontier and fall through to the distributed pipeline; the
+          // mirrors drop for good, building the stores and the bloom
           frontier = spark.createDataset(frontierLocal.get).toDF().localCheckpoint(true)
           frontierLocal = None
           dropMirrors()
@@ -1362,22 +1381,8 @@ class CrawlEngine(
         // UnsafeRow.copy ships compact row bytes instead.
         val unseen = {
           val unseenMaybe = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-            org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeen)
-              .map(r => (r.getUTF8String(lowerIdx).toString, r.copy()))
-              .partitionBy(seenPartitioner)
-              .zipPartitions(seenProbeRdd(), seenDeltaRdd) { (cit, pit, dit) =>
-                val base: Array[AnyRef] =
-                  if (pit.hasNext) pit.next().asInstanceOf[Array[AnyRef]]
-                  else new Array[AnyRef](0)
-                var delta: java.util.HashSet[String] = null
-                while (dit.hasNext) {
-                  if (delta == null) delta = new java.util.HashSet[String]()
-                  delta.add(dit.next()._1)
-                }
-                cit.collect { case (k, r)
-                  if java.util.Arrays.binarySearch(base, k) < 0 &&
-                    (delta == null || !delta.contains(k)) => r }
-              },
+            probeSeen(org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeen)
+              .map(r => (r.getUTF8String(lowerIdx).toString, r.copy())), present = false),
             withLower.schema)
           definitelyNew.unionByName(unseenMaybe)
         }
@@ -1813,20 +1818,8 @@ class CrawlEngine(
           // InternalRow probe shuffle (r6) — same rationale as the seen gate
           val newWinners = timed("sig_reroot")(
             org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-              org.apache.spark.sql.GraftSqlBridge.internalRdd(cands)
-                .map(r => (r.getLong(0), r.copy()))
-                .partitionBy(seenPartitioner)
-                .zipPartitions(sigProbeRdd(), sigDeltaRdd) { (cit, pit, dit) =>
-                  val base = if (pit.hasNext) pit.next() else Array.emptyLongArray
-                  var delta: java.util.HashSet[java.lang.Long] = null
-                  while (dit.hasNext) {
-                    if (delta == null) delta = new java.util.HashSet[java.lang.Long]()
-                    delta.add(Long.box(dit.next()._1))
-                  }
-                  cit.collect { case (k, r)
-                    if java.util.Arrays.binarySearch(base, k) < 0 &&
-                      (delta == null || !delta.contains(Long.box(k))) => r }
-                }, candsSchema)
+              probeSigs(org.apache.spark.sql.GraftSqlBridge.internalRdd(cands)
+                .map(r => (r.getLong(0), r.copy())), present = false), candsSchema)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           sigWinnerCaches :+= newWinners
           val firstPerSig = sigOk.withColumn("__k", sigKey)
@@ -1916,22 +1909,8 @@ class CrawlEngine(
           val maybeSeenLinks = withLu.filter(mightContain)
           val luIdx = withLu.schema.fieldIndex("__lu")
           val unseenMaybe = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-            org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeenLinks)
-              .map(r => (r.getUTF8String(luIdx).toString, r.copy()))
-              .partitionBy(seenPartitioner)
-              .zipPartitions(seenProbeRdd(), seenDeltaRdd) { (cit, pit, dit) =>
-                val base: Array[AnyRef] =
-                  if (pit.hasNext) pit.next().asInstanceOf[Array[AnyRef]]
-                  else new Array[AnyRef](0)
-                var delta: java.util.HashSet[String] = null
-                while (dit.hasNext) {
-                  if (delta == null) delta = new java.util.HashSet[String]()
-                  delta.add(dit.next()._1)
-                }
-                cit.collect { case (k, r)
-                  if java.util.Arrays.binarySearch(base, k) < 0 &&
-                    (delta == null || !delta.contains(k)) => r }
-              },
+            probeSeen(org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeenLinks)
+              .map(r => (r.getUTF8String(luIdx).toString, r.copy())), present = false),
             withLu.schema)
           val survivors = definitelyNew.unionByName(unseenMaybe).drop("__lu")
           val sorted = survivors
@@ -2050,9 +2029,9 @@ class CrawlEngine(
 object CrawlEngine {
 
   /** Cap on the driver-side seen/signature mirrors of the small-epoch fast
-    * path; past it the mirrors drop and the gate falls back to tiny probe
-    * jobs against the distributed stores. A var so the fallback is testable
-    * at toy scale.
+    * path; past it the mirrors drop (building the distributed stores from
+    * them) and the gate falls back to tiny probe jobs against those
+    * stores. A var so the fallback is testable at toy scale.
     */
   @volatile private[engine] var mirrorCap: Int = 1 << 20
 
@@ -2137,12 +2116,21 @@ object CrawlEngine {
     */
   private[engine] val blockedBufCap = 65536
 
-  /** Small-path parsed pages buffer driver-side up to this many rows before
-    * flushing one parquet delta — tiny epochs stop paying a write job each
-    * (r6). Rows are full ParsedPages (spans included), so the cap bounds
-    * driver memory; any pages-view read flushes first.
+  /** Small-path parsed pages buffer driver-side up to this many
+    * [[bufferedBytes]] before flushing one parquet delta — tiny epochs stop
+    * paying a write job each (r6). Rows are full ParsedPages, whose spans
+    * dominate their size, so the cap bounds driver memory whatever the
+    * page size; any pages-view read flushes first. A var so a test can
+    * force many flushes.
     */
-  private[engine] val pageBufCap = 16384
+  @volatile private[engine] var pageBufCapBytes: Long = 32L << 20
+
+  /** A buffered page's size for [[pageBufCapBytes]]: its span text and
+    * media_ref lengths plus a fixed row overhead, so span-less pages
+    * count too.
+    */
+  private[engine] def bufferedBytes(p: ParsedPage): Long = 256L + p.spans.iterator
+    .map(s => Option(s.text).fold(0)(_.length) + Option(s.media_ref).fold(0)(_.length)).sum
 
   /** Case-insensitive frontier dedup keeping the canonical-min row
     * (depth, discovery_seq, host, url) — a map-side-combining hash

@@ -138,12 +138,16 @@ final case class CrawlConfig(
     autoThrottleMinDelayMs: Long = 0L,
     autoThrottleMaxDelayMs: Long = 60000L,
     autoThrottleAlpha: Double = 0.15,
-    // long-crawl state hygiene: every k epochs compact seen/signature
-    // deltas into one checkpointed table and rebuild the per-partition
-    // probe structures, keeping per-epoch gate cost flat over thousands
-    // of epochs
+    // long-crawl state hygiene for the distributed seen/signature stores
+    // (built once the small path's driver mirrors drop; while those are
+    // live nothing folds): every k epochs compact the stores' deltas into
+    // one checkpointed table and rebuild the per-partition probe
+    // structures, keeping per-epoch gate cost flat over thousands of
+    // epochs
     stateCompactionEpochs: Int = 16,
-    // generation blooms: per-epoch delta blooms keep serving across
+    // generation blooms of the distributed seen store (one filter over the
+    // mirror keys when it is built, then one per epoch delta; the mirrors
+    // need no bloom): per-epoch delta blooms keep serving across
     // compactions; the full O(|seen|) bloom rebuild runs only when the
     // generation count exceeds this bound. Each generation is sized for
     // its epoch at 1% FPP, so the group false-positive estimate just

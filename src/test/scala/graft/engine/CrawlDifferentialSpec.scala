@@ -311,9 +311,9 @@ class CrawlDifferentialSpec extends AnyFunSuite {
 
   test("small->distributed transition mid-crawl preserves parity (fast-path handoff)") {
     // threshold 8: seeds run driver-side, the first fan-out crosses the
-    // threshold — the frontier materializes, the mirrors drop, and the
-    // crawl finishes on the distributed path with the blooms the small
-    // path banked
+    // threshold — the frontier materializes, the mirrors drop (building
+    // the seen and signature stores and the bloom from them), and the
+    // crawl finishes on the distributed path
     val params = CorpusParams(hosts = 3, pagesPerHost = 60)
     val cfg = CrawlConfig(maxEpochs = 30, smallEpochThreshold = 8)
     val (er, or) = run(params, cfg, Seq("https://www.site1.com/"))
@@ -333,6 +333,56 @@ class CrawlDifferentialSpec extends AnyFunSuite {
       val (er, or) = run(params, CrawlConfig(maxEpochs = 30), Seq("https://www.site0.com/"))
       assertParity(er, or)
     } finally CrawlEngine.mirrorCap = prev
+  }
+
+  test("a long small-path crawl with live mirrors submits no Spark job") {
+    // one page per host and epoch keeps the crawl on the small path for
+    // ~100 epochs that each add seen keys (host 0 holds 120 pages, the 15
+    // others 8 each). While the mirrors are live
+    // they are the only seen and signature stores, and the Fetcher serves
+    // driver-locally, so nothing from the first to the last epoch hook
+    // touches Spark. Each job is tagged with the last epoch hooked before
+    // its submission, through a local property of the crawling thread.
+    val params = CorpusParams(hosts = 16, pagesPerHost = 8, hotHostFactor = 15,
+      dupContentEvery = 3)
+    val seeds = (0 until 16).map(i => s"https://www.site$i.com/")
+    val cfg = CrawlConfig(delayMs = 250, tickMs = 1000, maxPerHostPerEpoch = 1, maxEpochs = 400)
+    val sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    val tag = "graft.test.epoch"
+    val tagged = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(t => tagged.add(t.toLong))
+    }
+    sc.addSparkListener(listener)
+    val robots = new CorpusRobots(params)
+    val er = try {
+      new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots, expectedUrls = 100000L,
+        onEpoch = Some(e => sc.setLocalProperty(tag, e.toString))).crawl(seeds)
+    } finally sc.setLocalProperty(tag, null)
+    org.apache.spark.ListenerBusBridge.drain(sc)
+    sc.removeSparkListener(listener)
+    val seenAdding = er.metrics.map(_.seen_size).sliding(2).count(w => w.size == 2 && w(1) > w(0))
+    assert(seenAdding >= 70, s"only $seenAdding epochs added seen keys")
+    assert(er.metrics.forall(_.candidates <= cfg.smallEpochThreshold), "left the small path")
+    import scala.jdk.CollectionConverters._
+    val between = tagged.asScala.filter(_ < er.epochs - 1)
+    assert(between.isEmpty, s"Spark jobs between epoch hooks, tagged ${between.toSeq.sorted}")
+    assertParity(er, OracleCrawler.crawl(params, cfg, robots, seeds))
+  }
+
+  test("a page buffer capped at a few KB flushes many deltas without divergence") {
+    val params = CorpusParams(hosts = 2, pagesPerHost = 60, dupContentEvery = 3)
+    val cfg = CrawlConfig(delayMs = 250, tickMs = 1000, maxEpochs = 200)
+    val prev = CrawlEngine.pageBufCapBytes
+    try {
+      CrawlEngine.pageBufCapBytes = 2048
+      val (er, or) = run(params, cfg, Seq("https://www.site0.com/", "https://www.site1.com/"))
+      assertParity(er, or)
+      // one parquet file per flush (uncapped, this crawl buffers one)
+      assert(er.pages.inputFiles.length > 10, s"${er.pages.inputFiles.length} flushes")
+    } finally CrawlEngine.pageBufCapBytes = prev
   }
 
   test("distributed politeness+budget+retry path equals oracle (smallEpochThreshold=0)") {
@@ -479,8 +529,8 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     // compaction every 3 epochs on a politeness-paced crawl that runs ~10+
     // epochs: seen/signature folds + bloom rebuild must not change ANY set
     val params = CorpusParams(hosts = 2, pagesPerHost = 20, dupContentEvery = 3)
-    // smallEpochThreshold=0: with the driver mirrors live the fast path
-    // defers compaction entirely, so force the distributed loop to
+    // smallEpochThreshold=0: while the driver mirrors are live there are
+    // no distributed stores to fold, so force the distributed loop to
     // actually cross fold boundaries
     val cfg = CrawlConfig(delayMs = 250, tickMs = 1000, maxEpochs = 120,
       stateCompactionEpochs = 3, smallEpochThreshold = 0)

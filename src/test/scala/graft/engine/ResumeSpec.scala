@@ -47,9 +47,11 @@ class ResumeSpec extends AnyFunSuite {
   private val distributedPath = 0
 
   /** Crawl to completion, crawl again checkpointed every epoch and stopped
-    * after epoch `stopAfter`, resume through a [[CountingFetcher]]; returns
-    * (full, resumed, the resume's fetcher, the checkpointer). */
-  private def killAndResume(params: CorpusParams, cfg: CrawlConfig, stopAfter: Int)
+    * after epoch `stopAfter`, resume (under `resumeCfg`, default `cfg`)
+    * through a [[CountingFetcher]]; returns (full, resumed, the resume's
+    * fetcher, the checkpointer). */
+  private def killAndResume(params: CorpusParams, cfg: CrawlConfig, stopAfter: Int,
+      resumeCfg: Option[CrawlConfig] = None)
       : (CrawlResult, CrawlResult, CountingFetcher, Checkpointer) = {
     val full = new CrawlEngine(spark, cfg, new GenerativeFetcher(params),
       new CorpusRobots(params), expectedUrls = 10000)
@@ -59,8 +61,8 @@ class ResumeSpec extends AnyFunSuite {
       new CorpusRobots(params), expectedUrls = 10000, checkpoint = Some(ck))
       .crawl(Seq("https://www.site0.com/"))
     val fetcher = new CountingFetcher(new GenerativeFetcher(params))
-    val resumed = CrawlEngine.resume(spark, cfg, fetcher, new CorpusRobots(params), ck,
-      Seq("https://www.site0.com/"), expectedUrls = 10000)
+    val resumed = CrawlEngine.resume(spark, resumeCfg.getOrElse(cfg), fetcher,
+      new CorpusRobots(params), ck, Seq("https://www.site0.com/"), expectedUrls = 10000)
     (full, resumed, fetcher, ck)
   }
 
@@ -99,6 +101,24 @@ class ResumeSpec extends AnyFunSuite {
       assert(seenKeys(resumed) == seenKeys(full))
       assert(fetcher.dist.get == 0 && fetcher.local.get > 0)
     } finally CrawlEngine.mirrorCap = prev
+  }
+
+  test("a resume that hands off to the distributed path builds the stores from restored mirrors") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // killed while the mirrors are live, resumed with threshold 1: the
+    // first resumed epoch outgrows the small path, so the seen and
+    // signature stores and the bloom are built from the restored mirrors
+    val params = CorpusParams(hosts = 2, pagesPerHost = 40, dupContentEvery = 3)
+    val cfg = CrawlConfig(maxEpochs = 20)
+    val (full, resumed, fetcher, ck) = killAndResume(params, cfg, stopAfter = 2,
+      resumeCfg = Some(cfg.copy(smallEpochThreshold = 1)))
+    assert(Checkpointer.driverState(ck.readManifest(2)) == ((true, true)))
+    assert(resumed.metrics.head.epoch == 3 && resumed.metrics.head.candidates > 1,
+      s"first resumed epoch stayed small: ${resumed.metrics.head}")
+    assert(fetcher.dist.get > 0, "the resume never ran a distributed epoch")
+    assert(key(resumed.pages) == key(full.pages),
+      s"resumed=${resumed.pages.count()} full=${full.pages.count()}")
+    assert(seenKeys(resumed) == seenKeys(full))
   }
 
   test("path_budget keys containing ':' and ',' survive a resume") {
@@ -235,8 +255,8 @@ class ResumeSpec extends AnyFunSuite {
   test("resume ACROSS a compaction boundary of the co-partitioned stores") {
     spark.sparkContext.setLogLevel("ERROR")
     // compaction every 2 epochs + politeness pacing (~8+ epochs) on the
-    // distributed path (the small path folds every 32 epochs while its
-    // mirrors are live): the interrupted run snapshots AFTER a
+    // distributed path (while its mirrors are live the small path has no
+    // distributed stores to fold): the interrupted run snapshots AFTER a
     // seen/signature fold, so resume restores compacted stores and then
     // compacts again before finishing
     val params = CorpusParams(hosts = 2, pagesPerHost = 25, dupContentEvery = 3)
